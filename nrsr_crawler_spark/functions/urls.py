@@ -74,6 +74,19 @@ def with_canon(
     dropped *before* a stateful op, as in streaming — pass ``valid_col`` and
     filter on that boolean: its expression references each intermediate only
     once, so the pushed-down predicate stays linear.
+
+    The same substitution reaches through joins: a filter above this
+    transform that compares a derived column (``hash_col``, ``canon_col``)
+    with a column from the other side of a join below it is pushed into
+    that join, and an equality becomes a join KEY — the whole inlined canon
+    then runs on every probe row, not just the rows the join keeps.  Keep
+    such checks out of filters (compare inside an aggregate, as
+    ``operators.frontier.rejoin_urls`` does).
+
+    Query params are sorted with ``sort_array`` (code-generated), not
+    ``array_sort`` (a lambda comparator that is always interpreted): the
+    orders agree because ``split`` never yields null elements, and the whole
+    transform stays in whole-stage codegen.
     """
     clash = set(df.columns) & set(_TMP_COLS)
     if clash:
@@ -138,7 +151,7 @@ def with_canon(
                 "__sq": F.when(F.col("__query") == "", F.lit("")).otherwise(
                     F.concat(
                         F.lit("?"),
-                        F.array_join(F.array_sort(F.split(F.col("__query"), "&")), "&"),
+                        F.array_join(F.sort_array(F.split(F.col("__query"), "&")), "&"),
                     )
                 ),
                 "__valid": (F.col("__loc") > 0)
@@ -208,7 +221,7 @@ def canonicalize(url: Column) -> Column:
         port.isNotNull() & ~(port.eqNullSafe(default_port)),
         F.concat(host, F.lit(":"), port.cast("string")),
     ).otherwise(host)
-    sorted_query = F.array_join(F.array_sort(F.split(query, "&")), "&")
+    sorted_query = F.array_join(F.sort_array(F.split(query, "&")), "&")
     valid = (loc > 0) & (host != "") & ~auth.contains("[") & scheme.rlike(_SCHEME_RE)
     return F.when(~valid, F.lit(None).cast("string")).otherwise(
         F.concat(

@@ -98,31 +98,38 @@ def rejoin_urls(
     the canon MAP-SIDE over ``raw`` (no exchange) and broadcast-join the
     popped keys onto it — URL strings never shuffle.
 
-    Shape: ONE broadcast of ``popped``, inner-joined on ``seq`` (a plain
-    long equality, evaluated BELOW the canon projection) so the recompute
-    pass pays regex/canon CPU only on rows that can match — O(budget ·
-    seq-dup-factor), not O(frontier) — then the exact winner is selected by
-    hash equality AFTER the canon.  A final groupBy on (url_hash, seq)
-    collapses exact duplicate raw rows (same url + same seq occurs in real
-    frontiers) back to ONE output row per popped key; that exchange carries
-    canon_url but is bounded by the POPPED set (≤ budget · hosts rows), so
-    the O(frontier)-scale stages still ship no URL strings — the invariant
-    that matters at 100 TB.  Deterministic: every duplicate has identical
-    canon_url (same hash) and identical carry columns (from the broadcast
-    side), and min() makes the collapse order-free.  Caveat: non-key
-    ``popped`` columns must not collide with ``raw`` column names (they are
-    carried through)."""
+    Plan shape: a ``BroadcastHashJoin`` of ``raw`` with the popped keys
+    whose ONLY key is ``seq`` and which has no join condition, so the probe
+    side pays one long lookup per frontier row and the canon projection
+    above the join runs on the matched rows only — O(budget ·
+    seq-dup-factor), not O(frontier).  The hash check is NOT a filter: a
+    filter comparing the recomputed hash with ``popped``'s would be pushed
+    into the join, with the whole canon inlined, as a second join key and
+    evaluated on every probe row (see :func:`U.with_canon`).  Instead the
+    groupBy on the popped ``(url_hash, seq)`` keeps ``canon_url`` only from
+    rows whose recomputed hash matches, and a filter on that aggregate drops
+    keys no raw row matches.  Rows sharing a ``seq`` with another URL, and
+    garbage URLs (canon NULL), contribute NULL, which ``min`` skips; exact
+    duplicate raw rows (same url + same seq occurs in real frontiers)
+    collapse into ONE output row per popped key.  That exchange carries
+    canon_url but is bounded by the matched rows (≤ budget · hosts ·
+    seq-dup-factor), so the O(frontier)-scale stages still ship no URL
+    strings.  Deterministic: every match has an identical canon_url (same
+    hash), carry columns come from the broadcast side, and min() makes the
+    collapse order-free.  Caveat: non-key ``popped`` columns must not
+    collide with ``raw`` column names (they are carried through)."""
     carry = [c for c in popped.columns if c not in ("url_hash", seq_col)]
     want = popped.withColumnRenamed("url_hash", "__want_hash")
     joined = raw.join(F.broadcast(want), seq_col)
-    prepared = U.with_canon(joined, url_col=url_col, hash_col="url_hash")
-    matched = prepared.filter(F.col("url_hash") == F.col("__want_hash"))
+    prepared = U.with_canon(joined, url_col=url_col, hash_col="__hash", host_col=None)
+    hit = F.col("__hash") == F.col("__want_hash")
     return (
-        matched.groupBy("url_hash", seq_col)
+        prepared.groupBy(F.col("__want_hash").alias("url_hash"), seq_col)
         .agg(
-            F.min("canon_url").alias("canon_url"),
+            F.min(F.when(hit, F.col("canon_url"))).alias("canon_url"),
             *[F.min(c).alias(c) for c in carry],
         )
+        .filter(F.col("canon_url").isNotNull())
         .select("url_hash", seq_col, "canon_url", *carry)
     )
 

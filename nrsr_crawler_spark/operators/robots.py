@@ -121,11 +121,11 @@ def crawl_delay_budgets(
 
 
 def budget_expr(host_budgets: dict[str, int], default_budget: int, host_col: Column) -> Column:
-    """Per-host budget as ONE driver-compiled when-chain Column (same shape
-    as :func:`allowed_expr` — zero shuffle, zero join; right whenever the
-    ruleset fits on the driver).  Constant within a host, as
-    ``politeness.pop_budget`` requires."""
-    expr: Column = F.lit(default_budget)
-    for h, b in sorted(host_budgets.items()):
-        expr = F.when(host_col == h, F.lit(b)).otherwise(expr)
-    return expr
+    """Per-host budget as ONE driver-compiled map-lookup Column (zero
+    shuffle, zero join; right whenever the budgets fit on the driver):
+    ``coalesce(element_at(map, host), default)``.  The map is a literal, so
+    the plan stays flat at any host count, where a when-chain nests one
+    level per host and overflows the planner's stack at ~1000 hosts.
+    Constant within a host, as ``politeness.pop_budget`` requires."""
+    pairs = [F.lit(x) for h, b in sorted(host_budgets.items()) for x in (h, b)]
+    return F.coalesce(F.element_at(F.create_map(*pairs), host_col), F.lit(default_budget))

@@ -185,7 +185,7 @@ class CrawlEngine:
         # robots Crawl-delay → per-host pop budgets (operators/robots.py):
         # with an epoch wall-clock window of epoch_seconds, a host declaring
         # delay δ absorbs ⌊epoch_seconds/δ⌋ serialized fetches per epoch.
-        # Compiled once into a when-chain budget column; None ⇒ flat budget.
+        # Compiled once into a map-lookup budget column; None ⇒ flat budget.
         self._budget_expr = None
         per_host: dict[str, int] = {}
         if epoch_seconds is not None and self.robots_rules:

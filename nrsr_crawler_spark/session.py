@@ -23,6 +23,27 @@ from pyspark.sql import SparkSession
 
 DEFAULT_SHUFFLE_PARTITIONS = int(os.environ.get("SPARK_GRAFT_SHUFFLE", "32"))
 
+_MAX_HEAP_MB = 24 * 1024
+_MAX_XMS_MB = 8 * 1024
+
+
+def _default_heap_mb() -> int:
+    """Driver heap sized for the machine: 40% of its RAM (the rest holds
+    the JVM's off-heap memory, Python workers and the page cache), between
+    1g and 24g.  A 16 GB box gets ~6g; 24g needs a 60 GB machine."""
+    ram_mb = os.sysconf("SC_PAGE_SIZE") * os.sysconf("SC_PHYS_PAGES") // 2**20
+    return max(1024, min(_MAX_HEAP_MB, ram_mb * 2 // 5))
+
+
+def _size_mb(spec: str) -> int:
+    """A ``spark.driver.memory`` size (``512m``, ``4g``; a bare number is
+    MB, as Spark reads it) in MB."""
+    spec = spec.strip().lower().removesuffix("b")
+    scale = {"k": 1 / 1024, "m": 1, "g": 1024, "t": 1024 * 1024}
+    if spec[-1:] in scale:
+        return int(float(spec[:-1]) * scale[spec[-1]])
+    return int(spec)
+
 
 def get_spark(
     app_name: str = "nrsr-crawler-spark",
@@ -38,6 +59,7 @@ def get_spark(
     if master is None:
         cpus = os.environ.get("SPARK_GRAFT_CPUS", "*")
         master = f"local[{cpus}]"
+    heap = os.environ.get("SPARK_GRAFT_DRIVER_MEM", f"{_default_heap_mb()}m")
     b = (
         SparkSession.builder.appName(app_name)
         .master(master)
@@ -61,14 +83,19 @@ def get_spark(
             "spark.sql.files.maxPartitionBytes",
             os.environ.get("SPARK_GRAFT_MAX_PARTITION_BYTES", "8m"),
         )
-        .config("spark.driver.memory", os.environ.get("SPARK_GRAFT_DRIVER_MEM", "24g"))
+        .config("spark.driver.memory", heap)
         # ParallelGC: measured G1 spending 292 s (!) on its first heavy pass
         # growing the heap (humongous string allocations) vs a flat ~17 s
         # under ParallelGC; batch throughput workloads don't need G1's pause
-        # targets.  Applies to executors via the same option on real submits.
+        # targets.  -Xms pins a third of the heap (at most 8g) so the first
+        # pass does not pay for heap growth either.  Applies to executors
+        # via the same option on real submits.
         .config(
             "spark.driver.extraJavaOptions",
-            os.environ.get("SPARK_GRAFT_GC", "-XX:+UseParallelGC -Xms8g"),
+            os.environ.get(
+                "SPARK_GRAFT_GC",
+                f"-XX:+UseParallelGC -Xms{min(_MAX_XMS_MB, _size_mb(heap) // 3)}m",
+            ),
         )
         .config("spark.ui.enabled", "false")
         .config("spark.sql.autoBroadcastJoinThreshold", str(64 * 1024 * 1024))

@@ -10,6 +10,8 @@ bench relies on so a refactor can't silently regress the plan shape.
 
 from __future__ import annotations
 
+import re
+
 import pytest
 from pyspark.sql import functions as F
 
@@ -112,17 +114,102 @@ def test_typed_parse_is_single_arrow_pass(spark):
     assert "BatchEvalPython" not in plan
 
 
+def _final_plan(df) -> str:
+    """Executed plan after a run: AQE's final plan (``*(n)`` marks the
+    operators compiled into WholeStageCodegen stage n)."""
+    df.collect()
+    plan = df._jdf.queryExecution().executedPlan().toString()
+    return plan.split("== Initial Plan ==")[0]
+
+
+def _canon_projects(plan: str) -> list[str]:
+    # operator lines of the plan tree that compute a with_canon column
+    made = tuple(f" AS {c}#" for c in (*U._TMP_COLS, "canon_url"))
+    return [
+        ln for ln in plan.splitlines()
+        if re.match(r"^[\s:|+-]*(\*\(\d+\) )?Project \[", ln) and any(m in ln for m in made)
+    ]
+
+
 def test_canon_stage_stays_in_wholestage_codegen(spark):
     raw = spark.range(0, 100).select(
-        F.concat(F.lit("https://www.nrsr.sk/p?id="), F.col("id")).alias("url")
+        F.concat(F.lit("https://www.nrsr.sk/p?z=1&id="), F.col("id")).alias("url")
     )
     df = U.with_canon(raw, hash_col="url_hash")
-    plan = df._jdf.queryExecution().explainString(
-        df._sc._jvm.org.apache.spark.sql.execution.ExplainMode.fromString("codegen")
+    plan = _final_plan(df)
+    # query params sort with the code-generated sort_array: array_sort's
+    # lambda comparator is CodegenFallback and interprets its whole Project
+    assert "array_sort" not in plan and "lambdafunction" not in plan.lower(), plan
+    projects = _canon_projects(plan)
+    assert len(projects) >= 8, plan
+    outside = [ln for ln in projects if not re.search(r"\*\(\d+\) Project", ln)]
+    assert not outside, outside
+
+
+def _popped_rejoin(spark):
+    raw = spark.range(0, 2000).select(
+        F.concat(F.lit("HTTPS://WWW.NRSR.SK/p?b=2&id="), F.col("id") % 500).alias("url"),
+        F.col("id").alias("seq"),
+        F.lit(0).alias("priority"),
     )
-    # "Found 1 WholeStageCodegen subtrees" and no fallback markers
-    assert "WholeStageCodegen" in plan
-    assert "Project" in plan
+    keys = politeness.pop_budget(
+        frontier.prepare_candidates_slim(raw), budget=20, tiebreak=[F.col("url_hash")]
+    ).select("url_hash", "seq", "rk")
+    return frontier.rejoin_urls(keys, raw)
+
+
+def test_rejoin_urls_joins_on_seq_only(spark):
+    """rejoin_urls' broadcast join must key on ``seq`` alone.  A hash check
+    that Catalyst can extract as a join key inlines the whole canon into the
+    probe side and evaluates it on every frontier row."""
+    plan = _final_plan(_popped_rejoin(spark))
+    joins = [ln.split("BroadcastHashJoin ", 1)[1].strip() for ln in plan.splitlines()
+             if "BroadcastHashJoin " in ln]
+    assert len(joins) == 1, plan
+    # keys [seq], [seq] and no join condition: the canon runs only above the join
+    seq_only = r"\[seq#\d+L?\], \[seq#\d+L?\], Inner, Build\w+, false"
+    assert re.fullmatch(seq_only, joins[0]), joins[0][:500]
+    projects = _canon_projects(plan)
+    assert projects, plan
+    outside = [ln for ln in projects if not re.search(r"\*\(\d+\) Project", ln)]
+    assert not outside, outside
+
+
+def test_rejoin_urls_returns_each_popped_key_once(spark):
+    """Exactly the popped ``(url_hash, seq)`` keys come back, once each,
+    with their canonical URL — when several raw rows share a ``seq`` but
+    canonicalize to different URLs, when a raw row is duplicated exactly,
+    and when NULL or garbage URLs share a popped ``seq``."""
+    raw = spark.createDataFrame(
+        [
+            ("https://a.example/x?b=2&a=1", 5),
+            ("https://a.example/y", 5),  # same seq, other URL, popped too
+            ("HTTPS://A.EXAMPLE:443/x?a=1&b=2", 5),  # same canon as row 1
+            ("https://a.example/x?b=2&a=1", 5),  # exact duplicate of row 1
+            (None, 5),
+            ("not a url at all", 5),
+            ("", 5),
+            ("https://a.example/z", 9),
+            ("https://a.example/w", 9),  # same seq, other URL, not popped
+            ("https://a.example/x?a=1&b=2", 11),  # popped URL, other seq
+            (None, 9),
+        ],
+        "url string, seq long",
+    )
+    want = [
+        ("https://a.example/x?a=1&b=2", 5, 1),
+        ("https://a.example/y", 5, 2),
+        ("https://a.example/z", 9, 3),
+    ]
+    keyed = spark.createDataFrame(want, "canon string, seq long, rk int").select(
+        F.xxhash64("canon").alias("url_hash"), "seq", "canon", "rk"
+    )
+    expected = sorted(tuple(r) for r in keyed.collect())
+    popped = keyed.drop("canon")
+    out = frontier.rejoin_urls(popped, raw).select("url_hash", "seq", "canon_url", "rk")
+    got = sorted(tuple(r) for r in out.collect())
+    assert got == expected
+    assert all(U.canonicalize_py(c) == c for _, _, c, _ in got)
 
 
 def test_phash_neardup_avoids_cartesian_product(spark):

@@ -130,6 +130,44 @@ def test_pop_budget_per_host_column_matches_naive(spark):
     assert naive.exceptAll(got).count() == 0
 
 
+def test_budget_expr_many_hosts_matches_lookup(spark):
+    """2500 per-host budgets stay one flat expression (a when-chain nests
+    one level per host and overflows the planner's stack near 1000 hosts):
+    the column equals a dict lookup with the default for unknown and NULL
+    hosts, and the budget pop equals the naive window over a joined budget
+    table."""
+    from nrsr_crawler_spark.operators import robots
+
+    n_hosts = 2500
+    budgets = {f"h{i}.example": 1 + i % 4 for i in range(n_hosts)}
+    bcol = robots.budget_expr(budgets, 9, F.col("host"))
+    hosts = [(h,) for h in budgets] + [("unknown.example",), ("",), (None,)]
+    looked_up = spark.createDataFrame(hosts, "host string").select("host", bcol.alias("b"))
+    got = {r["host"]: r["b"] for r in looked_up.collect()}
+    assert got == {**budgets, "unknown.example": 9, "": 9, None: 9}
+
+    # 3 rows per known host plus 20 on an unlisted one
+    known = F.concat(F.lit("h"), (F.col("id") % n_hosts).cast("string"), F.lit(".example"))
+    fr = spark.range(3 * n_hosts + 20).select(
+        F.when(F.col("id") < 3 * n_hosts, known).otherwise(F.lit("other.example")).alias("host"),
+        (F.col("id") % 4).alias("priority"),
+        F.col("id").alias("seq"),
+        F.xxhash64(F.col("id").cast("string")).alias("url_hash"),
+    )
+    popped = pop_budget(fr, budget=bcol).select("host", "seq", "rk")
+    table = spark.createDataFrame(list(budgets.items()), "host string, b int")
+    w = Window.partitionBy("host").orderBy(*pop_order())
+    naive = (
+        fr.join(F.broadcast(table), "host", "left")
+        .withColumn("rk", F.row_number().over(w))
+        .filter(F.col("rk") <= F.coalesce(F.col("b"), F.lit(9)))
+        .select("host", "seq", "rk")
+    )
+    assert popped.exceptAll(naive).count() == 0
+    assert naive.exceptAll(popped).count() == 0
+    assert popped.filter(F.col("host") == "other.example").count() == 9
+
+
 def test_crawl_delay_budgets_semantics():
     from nrsr_crawler_spark.operators.robots import crawl_delay_budgets
 
